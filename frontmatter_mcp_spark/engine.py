@@ -15,13 +15,18 @@ Execution model: the ``files`` table is a DataFrame pipeline
 (listing -> mapInPandas parse -> key-union pivot -> temp view) and user
 SQL goes verbatim (modulo the documented dialect shim) to ``spark.sql``
 — Catalyst plans it, exactly as the reference hands SQL to DuckDB
-(query.py:72). A per-(glob, listing-signature) snapshot cache plays the
-role of the reference's mtime parse cache: an unchanged vault never
-re-parses.
+(query.py:72). A one-entry snapshot cache plays the role of the
+reference's mtime parse cache: an unchanged vault never re-parses. Its
+key is (glob + listing signature, embedding-store generation when the
+index is READY else None), so the semantic ``embedding`` column is
+joined once per index generation, as the reference adds it once per
+load, and a query that hits the snapshot runs only its own Spark jobs.
+Only inputs are cached: every query's result is computed afresh.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from pathlib import Path
 from typing import Any
 
@@ -34,7 +39,11 @@ from frontmatter_mcp_spark.functions.sqlfuncs import register_sql_functions
 from frontmatter_mcp_spark.plans.dialect import translate
 from frontmatter_mcp_spark.semantic.indexer import EmbeddingIndexer, IndexerState
 from frontmatter_mcp_spark.semantic.model import EmbeddingModel
-from frontmatter_mcp_spark.semantic.query import attach_embeddings, register_embed_udf
+from frontmatter_mcp_spark.semantic.query import (
+    attach_embeddings,
+    fold_embed_literals,
+    register_embed_udf,
+)
 from frontmatter_mcp_spark.semantic.store import EmbeddingStore
 from frontmatter_mcp_spark.sources import markdown as md
 
@@ -60,6 +69,18 @@ def _referenced_identifiers(sql: str) -> set[str]:
     if "*" in sql:
         ids.add("*")
     return ids
+
+
+@dataclass
+class _Snapshot:
+    """The cached inputs of the ``files`` view for one snapshot key."""
+
+    parsed: DataFrame  # cached parse; depends on the listing alone
+    base: DataFrame  # ``parsed``, or a cached copy with ``embedding`` joined
+    files_df: DataFrame | None  # the full pivot; None when the vault is wide
+    keys: list[str]
+    warnings: list[str]
+    file_count: int
 
 
 class FrontmatterEngine:
@@ -92,9 +113,9 @@ class FrontmatterEngine:
 
         ship_package_to_executors(spark)  # user-supplied sessions too
         register_sql_functions(spark)
+        # (listing signature, READY store generation or None)
         self._snapshot_key: tuple | None = None
-        # (files_df | None-when-wide, parsed, warnings, keys)
-        self._snapshot: tuple[DataFrame | None, DataFrame, list[str], list[str]] | None = None
+        self._snapshot: _Snapshot | None = None
 
         self.semantic_enabled = semantic
         self.indexer: EmbeddingIndexer | None = None
@@ -149,42 +170,64 @@ class FrontmatterEngine:
             tuple((p.relative_to(self.base_dir).as_posix(), p.stat().st_mtime) for p in paths),
         )
 
-    def _build_files(self, glob: str, sql: str | None = None) -> tuple[DataFrame, list[str]]:
-        key = self._listing_signature(glob)
-        if self._snapshot is None or self._snapshot_key != key:
-            if self._snapshot is not None:
-                self._snapshot[1].unpersist()
-            parsed = md.parsed_df(self.spark, self.base_dir, glob)
-            parsed.cache()
-            keys, warnings = md.parse_summary(parsed)
-            # narrow vaults pivot every key once and cache the view;
-            # wide vaults (> wide_schema_limit keys) defer to a
-            # per-query projection of only the referenced keys
-            files_df = (
-                md.files_dataframe(parsed, keys)
-                if len(keys) <= self.wide_schema_limit
-                else None
-            )
-            self._snapshot_key = key
-            self._snapshot = (files_df, parsed, warnings, keys)
-        files_df, parsed, warnings, keys = self._snapshot
-        if files_df is None:
-            use = keys  # SELECT * (or no SQL context): the full width
-            if sql is not None:
-                refs = _referenced_identifiers(sql)
-                if "*" not in refs:
-                    use = sorted(set(keys) & refs)
-            files_df = md.files_dataframe(parsed, use)
-        return files_df, warnings
+    def _index_generation(self) -> int | None:
+        """The store generation the ``embedding`` column shows: None
+        (no column) unless the index is READY."""
+        if self.indexer is not None and self.indexer.state == IndexerState.READY:
+            return self.store.current_generation()
+        return None
 
-    def _parsed(self, glob: str) -> DataFrame:
-        self._build_files(glob)
+    def _snapshot_for(self, glob: str) -> _Snapshot:
+        sig = self._listing_signature(glob)
+        # a second pass rebuilds once if the background indexer
+        # committed while the first one materialized the join
+        for _ in range(2):
+            key = (sig, self._index_generation())
+            if key == self._snapshot_key:
+                break
+            self._load_snapshot(glob, key)
         assert self._snapshot is not None
-        return self._snapshot[1]
+        return self._snapshot
+
+    def _load_snapshot(self, glob: str, key: tuple) -> None:
+        old = self._snapshot
+        if old is not None and self._snapshot_key[0] == key[0]:
+            # same listing, new generation: keep the parse, re-join
+            if old.base is not old.parsed:
+                old.base.unpersist()
+            parsed, keys, warnings, file_count = old.parsed, old.keys, old.warnings, old.file_count
+        else:
+            self.invalidate()
+            # the body is the indexer's input, never the view's
+            parsed = md.parsed_df(self.spark, self.base_dir, glob).drop("body")
+            parsed.cache()
+            keys, warnings, file_count = md.parse_summary(parsed)
+        base = parsed
+        if key[1] is not None:
+            _, rows = self.store.current()
+            base = attach_embeddings(parsed, rows).cache()
+            base.count()  # materialize while the generation's files are live
+        # narrow vaults pivot every key once; wide vaults (>
+        # wide_schema_limit keys) defer to a per-query projection of
+        # only the referenced keys
+        files_df = md.files_dataframe(base, keys) if len(keys) <= self.wide_schema_limit else None
+        self._snapshot_key = key
+        self._snapshot = _Snapshot(parsed, base, files_df, keys, warnings, file_count)
+
+    def _build_files(self, glob: str, sql: str) -> tuple[DataFrame, list[str]]:
+        snap = self._snapshot_for(glob)
+        if snap.files_df is not None:
+            return snap.files_df, snap.warnings
+        refs = _referenced_identifiers(sql)
+        use = snap.keys if "*" in refs else sorted(set(snap.keys) & refs)  # SELECT *: full width
+        return md.files_dataframe(snap.base, use), snap.warnings
 
     def invalidate(self) -> None:
-        if self._snapshot is not None:
-            self._snapshot[1].unpersist()
+        snap = self._snapshot
+        if snap is not None:
+            snap.parsed.unpersist()
+            if snap.base is not snap.parsed:
+                snap.base.unpersist()
         self._snapshot = None
         self._snapshot_key = None
 
@@ -194,14 +237,11 @@ class FrontmatterEngine:
     def query(self, glob: str, sql: str) -> dict[str, Any]:
         """The main entry point (reference server.py:121-169)."""
         files_df, warnings = self._build_files(glob, sql)
-        if (
-            self.semantic_enabled
-            and self.indexer is not None
-            and self.indexer.state == IndexerState.READY
-        ):
-            files_df = attach_embeddings(files_df, self.store)
         files_df.createOrReplaceTempView("files")
-        result = self.spark.sql(translate(sql))
+        spark_sql = translate(sql)
+        if self.semantic_enabled:
+            spark_sql = fold_embed_literals(spark_sql, self.model)
+        result = self.spark.sql(spark_sql)
         if self.max_rows is None:
             # the reference's response contract: the full result, collected
             rows = [r.asDict(recursive=True) for r in result.collect()]
@@ -228,17 +268,17 @@ class FrontmatterEngine:
 
     def query_inspect(self, glob: str) -> dict[str, Any]:
         """Schema advertisement (reference server.py:87-118)."""
-        parsed = self._parsed(glob)
-        schema = qs.create_base_schema(parsed)
-        file_count = parsed.filter("error IS NULL").count()
-        warnings = md.parse_warnings(parsed)
+        snap = self._snapshot_for(glob)
+        schema = qs.create_base_schema(snap.parsed, snap.file_count)
         if (
             self.semantic_enabled
             and self.indexer is not None
             and self.indexer.state == IndexerState.READY
         ):
             schema = qs.add_semantic_schema(schema, self.model.get_dimension())
-        return _build_response({"file_count": file_count, "schema": schema}, warnings)
+        return _build_response(
+            {"file_count": snap.file_count, "schema": schema}, snap.warnings
+        )
 
     # ------------------------------------------------------------------
     # mutation tools (driver-side filesystem ops; warnings contract)

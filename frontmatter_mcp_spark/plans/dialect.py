@@ -101,6 +101,38 @@ def _rewrite_list_functions(sql: str) -> str:
     return _rewrite_list_distinct(sql)
 
 
+# where a run opens that is not SQL code: a string literal, a quoted
+# identifier or a comment
+OPAQUE_RE = re.compile(r"['\"`]|--|/\*")
+
+
+def skip_opaque(sql: str, i: int) -> int:
+    """Index just past the string literal ('...' or "..."), backquoted
+    identifier or comment opening at ``sql[i]`` — ``len(sql)`` when it
+    is unterminated. Inside quotes a doubled quote escapes itself, and
+    in a string literal a backslash escapes the next character (Spark
+    SQL's lexer rules)."""
+    n = len(sql)
+    if sql.startswith("--", i):
+        end = sql.find("\n", i)
+        return n if end < 0 else end + 1
+    if sql.startswith("/*", i):
+        end = sql.find("*/", i + 2)
+        return n if end < 0 else end + 2
+    quote, i = sql[i], i + 1
+    while i < n:
+        ch = sql[i]
+        if ch == "\\" and quote != "`":
+            i += 2
+        elif ch != quote:
+            i += 1
+        elif sql[i + 1 : i + 2] == quote:
+            i += 2
+        else:
+            return i + 1
+    return n
+
+
 def _rewrite_list_distinct(sql: str) -> str:
     """``list_distinct(X)`` -> ``filter(array_distinct(X), x -> x IS NOT
     NULL)``: DuckDB's list_distinct REMOVES null elements, Spark's
@@ -114,12 +146,11 @@ def _rewrite_list_distinct(sql: str) -> str:
             return sql
         depth, i, n = 1, m.end(), len(sql)
         while i < n and depth:
+            if OPAQUE_RE.match(sql, i):
+                i = skip_opaque(sql, i)
+                continue
             ch = sql[i]
-            if ch == "'":  # skip string literal ('' escapes itself)
-                i += 1
-                while i < n and (sql[i] != "'" or sql[i : i + 2] == "''"):
-                    i += 2 if sql[i : i + 2] == "''" else 1
-            elif ch == "(":
+            if ch == "(":
                 depth += 1
             elif ch == ")":
                 depth -= 1

@@ -187,7 +187,8 @@ class EmbeddingIndexer:
         current = parsed.select(
             "path", "mtime", F.trim(F.col("body")).alias("body")
         ).filter(F.col("body") != "")
-        cached = self.store.read().select(
+        _, indexed = self.store.current()
+        cached = indexed.select(
             F.col("path").alias("c_path"), F.col("mtime").alias("c_mtime")
         )
         joined = current.join(cached, current.path == cached.c_path, "left")
@@ -195,8 +196,7 @@ class EmbeddingIndexer:
             F.col("c_path").isNull() | (F.col("c_mtime") < F.col("mtime"))
         ).select("path", "mtime", "body")
         deleted_rows = (
-            self.store.read()
-            .join(parsed.select("path"), "path", "left_anti")
+            indexed.join(parsed.select("path"), "path", "left_anti")
             .select("path")
             .collect()
         )

@@ -122,6 +122,9 @@ class EmbeddingStore:
         self.dim = dim
         self.retention_commits = max(1, retention_commits)
         self._lock_state = threading.local()
+        # per-generation memos of current() and count()
+        self._current: tuple[int, DataFrame] | None = None
+        self._count: tuple[int, int] | None = None
         self.store_dir.mkdir(parents=True, exist_ok=True)
         # open-time maintenance mutates shared state (clear() on model
         # change; _recover() deletes staging/unreferenced dirs) — without
@@ -276,8 +279,29 @@ class EmbeddingStore:
     def current_generation(self) -> int:
         return int(self._load_manifest()["gen"])
 
+    def current(self) -> tuple[int, DataFrame]:
+        """``(generation, rows)`` of the committed store, resolved once
+        per generation. ``read()`` lists every live bucket directory —
+        past 32 paths that is a parallel listing job — so readers of the
+        current snapshot share one resolved frame until a commit moves
+        the generation. The label is read before the rows, so the rows
+        are never older than it and a reader that sees the generation
+        move re-resolves; racing threads (the background indexer) at
+        worst resolve one generation twice."""
+        gen = self.current_generation()
+        if self._current is None or self._current[0] != gen:
+            self._current = (gen, self.read())
+        return self._current
+
     def count(self) -> int:
-        return self.read().count()
+        """Indexed rows: no Spark job when nothing is indexed, else one
+        count per generation over the ``current()`` frame."""
+        if not self._load_manifest()["buckets"]:
+            return 0
+        gen, rows = self.current()
+        if self._count is None or self._count[0] != gen:
+            self._count = (gen, rows.count())
+        return self._count[1]
 
     # -- writes ------------------------------------------------------------
     def _affected_buckets(self, paths_df: DataFrame) -> list[int]:

@@ -13,7 +13,8 @@ semantic search is enabled, matching the reference's
 Protocol subset implemented: ``initialize``, ``ping``, ``tools/list``,
 ``tools/call``, and notification handling (no response). Tool results
 are returned MCP-style: a ``content`` array with the JSON text plus
-``structuredContent`` carrying the engine's response dict verbatim;
+``structuredContent`` carrying the engine's response dict as that same
+JSON (values JSON cannot encode, like a YAML date, as strings);
 tool-level failures come back as ``isError: true`` rather than protocol
 errors, per the MCP spec.
 
@@ -191,9 +192,12 @@ class MCPServer:
                 "content": [{"type": "text", "text": f"{type(e).__name__}: {e}"}],
                 "isError": True,
             }
+        # one JSON-safe view for both (a YAML date becomes its ISO
+        # string), so the frame always encodes
+        text = json.dumps(result, default=str)
         return {
-            "content": [{"type": "text", "text": json.dumps(result, default=str)}],
-            "structuredContent": result,
+            "content": [{"type": "text", "text": text}],
+            "structuredContent": json.loads(text),
             "isError": False,
         }
 

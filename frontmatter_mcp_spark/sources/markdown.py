@@ -23,7 +23,7 @@ from collections.abc import Iterator
 from pathlib import Path
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from frontmatter_mcp_spark.files import collect_files, parse_document, serialize_value
@@ -115,28 +115,29 @@ def parsed_df(spark: SparkSession, base_dir: str | Path, glob: str) -> DataFrame
     )
 
 
-def parse_summary(parsed: DataFrame) -> tuple[list[str], list[str]]:
-    """(sorted key union, sorted parse warnings) in ONE job.
+def parse_summary(parsed: DataFrame) -> tuple[list[str], list[str], int]:
+    """(sorted key union, sorted parse warnings, parsed-file count) in
+    ONE job.
 
     The cold query path previously ran two driver actions over the
     cached parse (warnings collect, then key-union collect); fusing them
-    halves the pre-SQL job count. Warnings sort by their leading path,
-    matching the reference's per-file iteration order (the old collect
-    order was partition-interleaved anyway)."""
+    halves the pre-SQL job count, and the count lets query_inspect skip
+    its own. Warnings sort by their leading path, matching the
+    reference's per-file iteration order (the old collect order was
+    partition-interleaved anyway)."""
+    ok = F.col("error").isNull()
     row = (
-        parsed.select(
-            F.col("error"),
-            F.when(F.col("error").isNull(), F.map_keys("props")).alias("ks"),
-        )
+        parsed.select(F.col("error"), F.when(ok, F.map_keys("props")).alias("ks"), ok.alias("ok"))
         .agg(
             F.array_sort(
                 F.array_distinct(F.flatten(F.collect_list("ks")))
             ).alias("keys"),
             F.array_sort(F.collect_list("error")).alias("errs"),
+            F.count_if("ok").alias("n_ok"),
         )
         .collect()[0]
     )
-    return list(row.keys or []), list(row.errs or [])
+    return list(row.keys or []), list(row.errs or []), row.n_ok
 
 
 def key_union(parsed: DataFrame) -> list[str]:
@@ -152,27 +153,31 @@ def key_union(parsed: DataFrame) -> list[str]:
     return sorted(r.k for r in rows)
 
 
+def view_path() -> Column:
+    """The files view's ``path``: a frontmatter key literally named
+    'path' wins per file (the reference's dict-update precedence,
+    query.py records |= metadata); otherwise the file's own path."""
+    return F.coalesce(F.col("props").getItem("path"), F.col("path"))
+
+
 def files_dataframe(
     parsed: DataFrame, keys: list[str] | None = None
 ) -> DataFrame:
     """Pivot the parsed map to the dynamic all-strings ``files`` schema:
     ``path`` plus one string column per frontmatter key; files lacking a
-    key get NULL (map lookup of a missing key). Pure projection."""
+    key get NULL (map lookup of a missing key). Columns joined onto the
+    parse beyond its schema (the semantic ``embedding``) pass through
+    last. Pure projection."""
     if keys is None:
         keys = key_union(parsed)
     ok = parsed.filter(F.col("error").isNull())
     # a frontmatter key literally named 'path' must yield ONE column with
-    # the metadata value winning per-file (the reference's dict-update
-    # precedence, query.py records |= metadata) — never two ambiguous
-    # 'path' columns
-    path_col = F.col("path")
-    if "path" in keys:
-        path_col = F.coalesce(F.col("props").getItem("path"), F.col("path"))
+    # the metadata value winning per-file — never two ambiguous 'path'
+    # columns
+    path_col = view_path() if "path" in keys else F.col("path")
+    joined = [c for c in parsed.columns if c not in PARSED_SCHEMA.fieldNames()]
     return ok.select(
         path_col.alias("path"),
         *[F.col("props").getItem(k).alias(k) for k in keys if k != "path"],
+        *joined,
     )
-
-
-def parse_warnings(parsed: DataFrame) -> list[str]:
-    return [r.error for r in parsed.filter(F.col("error").isNotNull()).select("error").collect()]

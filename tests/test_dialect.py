@@ -152,3 +152,17 @@ def test_list_distinct_null_semantics_match_duckdb(spark):
         "SELECT list_sort(list_distinct(['a', NULL, 'a', 'b'])) AS x"
     ).fetchone()[0]
     assert got == want == ["a", "b"]
+
+
+def test_list_distinct_argument_skips_quoted_parens_and_comments():
+    """A paren inside a double-quoted or backslash-escaped string, or in
+    a comment, does not end the list_distinct argument."""
+    for arg in [
+        'split(x, ")")',
+        "split(x, 'it\\'s)')",
+        "split(x, ',') /* ) */",
+    ]:
+        out = translate(f"SELECT list_distinct({arg}) FROM files")
+        assert out == (
+            f"SELECT filter(array_distinct({arg}), __ld_x -> __ld_x IS NOT NULL) FROM files"
+        )

@@ -188,3 +188,27 @@ def test_serve_loop_stdio_roundtrip(server):
     assert [r["id"] for r in responses] == [0, 1, 2, 3]  # notification skipped
     assert responses[2]["result"]["structuredContent"]["results"] == [{"n": 2}]
     assert responses[3]["result"] == {}
+
+
+def test_serve_update_of_dated_note_encodes_date(spark, tmp_path):
+    """A YAML ``date:`` comes back from update as a datetime.date; the
+    stdio loop must still write the frame, with the date as its ISO
+    string in both the text and the structured content."""
+    (tmp_path / "n.md").write_text("---\ntitle: N\ndate: 2025-11-27\n---\nBody\n")
+    server = MCPServer(FrontmatterEngine(spark, tmp_path))
+    frame = {
+        "jsonrpc": "2.0",
+        "id": 7,
+        "method": "tools/call",
+        "params": {"name": "update", "arguments": {"path": "n.md", "set": {"status": "done"}}},
+    }
+    stdout = io.StringIO()
+    server.serve(io.StringIO(json.dumps(frame) + "\n"), stdout)
+    lines = stdout.getvalue().splitlines()
+    assert len(lines) == 1
+    result = json.loads(lines[0])["result"]
+    assert result["isError"] is False
+    sc = result["structuredContent"]
+    assert sc["frontmatter"] == {"title": "N", "date": "2025-11-27", "status": "done"}
+    assert json.loads(result["content"][0]["text"]) == sc
+    assert parse_file(tmp_path / "n.md", tmp_path).metadata["status"] == "done"
